@@ -57,8 +57,8 @@ def nproc() -> int:
 
 def java_version() -> str:
     try:
-        out = subprocess.run(["java", "-version"], capture_output=True,
-                             text=True, timeout=30)
+        out = subprocess.run(["java", "-XX:-UsePerfData", "-version"],
+                             capture_output=True, text=True, timeout=30)
     except (OSError, subprocess.TimeoutExpired):
         return "unknown"
     first = (out.stderr or out.stdout).splitlines()
@@ -84,7 +84,11 @@ def start_spark(tmp: str, n: int):
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
-    java_tmp = f"-Djava.io.tmpdir={os.path.join(tmp, 'java')}"
+    # -XX:-UsePerfData: no JVM writes its perf-data file to the system
+    # temp directory, outside the run's own directory
+    java_tmp = (f"-Djava.io.tmpdir={os.path.join(tmp, 'java')} "
+                "-XX:-UsePerfData")
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     confs = {
         # the whole heap (2g, as SPARK_GRAFT_DRIVER_MEM sets it) committed
         # and touched up front: its lazy growth otherwise swings the

@@ -20,6 +20,7 @@ from common import median, percentile
 
 SF = 0.002
 TAIL_P = 75.0
+MIN_SAMPLES = 40        # ten executions beyond the p75
 # A fixed cross-section of the registry, one or more per operator family
 # (OHLC, top-k, proximity and as-of joins, dedup, similarity, sketches,
 # aggregates, windows, filters, decode). Running all 50 registered queries
@@ -128,7 +129,7 @@ def run_lake(spark, seed: int, seconds: float, tracer, tmp: str,
 
     t0 = time.time()
     rnd = 0
-    while time.time() - t0 < seconds:
+    while time.time() - t0 < seconds or len(samples) < MIN_SAMPLES:
         rnd += 1
         for name in order(seed, rnd):
             attempted += 1
