@@ -5,6 +5,7 @@ functions."""
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import platform
@@ -72,6 +73,17 @@ def env_stamp(seed: int, master: str) -> dict:
             "java": java_version(), "python": platform.python_version()}
 
 
+def cpu_probe_ms() -> float:
+    """Milliseconds for a fixed single-threaded Python loop: a note of how
+    fast the machine ran, to tell drift in the machine from drift in the
+    program when comparing runs. No metric is scaled by it."""
+    t = time.perf_counter()
+    acc = 0
+    for i in range(1_000_000):
+        acc += i * i
+    return (time.perf_counter() - t) * 1e3
+
+
 def start_spark(tmp: str, n: int):
     """The engine's own session factory at ``local[n]``, with every
     scratch directory Spark and its Python workers use kept under
@@ -90,11 +102,10 @@ def start_spark(tmp: str, n: int):
                 "-XX:-UsePerfData")
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     confs = {
-        # the whole heap (2g, as SPARK_GRAFT_DRIVER_MEM sets it) committed
-        # and touched up front: its lazy growth otherwise swings the
-        # peak-memory figure by hundreds of MB from run to run
-        "spark.driver.extraJavaOptions":
-            f"{java_tmp} -Xms2g -XX:+AlwaysPreTouch",
+        # the heap sized once, at its 2g maximum (SPARK_GRAFT_DRIVER_MEM),
+        # so the collector's heap-growth heuristics do not vary from run
+        # to run; pages are still touched only as the program uses them
+        "spark.driver.extraJavaOptions": f"{java_tmp} -Xms2g",
         "spark.executor.extraJavaOptions": java_tmp,
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
         # the status store must keep every job of a run for the
@@ -148,32 +159,39 @@ def _exe(pid: int) -> str:
 
 
 class MemSampler:
-    """Peak summed proportional set size (PSS) of this process and its
-    descendants: the driver, the JVM and the Python workers. PSS splits
+    """The memory the program holds while it works, in three parts.
+
+    ``python_mb``: the peak summed proportional set size (PSS) of this
+    process and its descendants other than the JVM, sampled until
+    ``finish``: the Python driver and the Python workers. PSS splits
     pages shared by forked workers between them, so a forked tree is not
-    counted twice over, as summed RSS would. A JVM child that has not yet
-    replaced its image (a process spawn in flight) shares the JVM's
-    memory and is skipped, as are the ids in ``exclude`` with their
-    descendants (the load generator is not part of the system under
-    test)."""
+    counted twice over, as summed RSS would. The ids in ``exclude`` are
+    skipped with their descendants (the load generator is not part of the
+    system under test).
+
+    ``heap_mb`` and ``non_heap_mb``: the JVM's heap in use after a full
+    collection (the data the program keeps: cached tables, state stores)
+    and its metaspace and code cache, read at ``finish`` from the JVM's
+    public memory bean. The JVM's own PSS is not used: the pages its heap
+    has touched say more about the collector than about the program."""
 
     def __init__(self, interval: float = 0.5):
         self.interval = interval
         self.exclude: set[int] = set()
         self.peak_kb = 0
+        self.heap_mb = self.non_heap_mb = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def sample(self) -> int:
-        total, todo = 0, [(os.getpid(), "")]
+        total, todo = 0, [os.getpid()]
         while todo:
-            pid, parent_exe = todo.pop()
+            pid = todo.pop()
             if pid in self.exclude:
                 continue
-            exe = _exe(pid)
-            if not (exe and exe == parent_exe and "java" in exe):
+            if "java" not in _exe(pid):
                 total += _pss_kb(pid)
-            todo += [(c, exe) for c in _children(pid)]
+            todo += _children(pid)
         self.peak_kb = max(self.peak_kb, total)
         return total
 
@@ -189,11 +207,33 @@ class MemSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
+
+    def finish(self, spark) -> None:
+        """End sampling when the measured work is done, before the
+        benchmark's own checks, and read the JVM's figures."""
+        self._stop.set()
+        self._thread.join(timeout=5)
         self.sample()
+        bean = spark.sparkContext._jvm.java.lang.management \
+            .ManagementFactory.getMemoryMXBean()
+        # Python first, so py4j releases the JVM objects that dead Python
+        # handles kept alive; then the JVM twice, because Spark's context
+        # cleaner frees the blocks of broadcasts and shuffles found dead
+        # by the first collection on its own thread, after it
+        gc.collect()
+        bean.gc()
+        time.sleep(1.0)
+        bean.gc()
+        self.heap_mb = bean.getHeapMemoryUsage().getUsed() / 2**20
+        self.non_heap_mb = bean.getNonHeapMemoryUsage().getUsed() / 2**20
 
     @property
-    def peak_mb(self) -> float:
+    def python_mb(self) -> float:
         return self.peak_kb / 1024.0
+
+    @property
+    def total_mb(self) -> float:
+        return self.python_mb + self.heap_mb + self.non_heap_mb
 
 
 # -- tracing -------------------------------------------------------------

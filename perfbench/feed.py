@@ -36,7 +36,6 @@ LIVE_TAIL_P = 95.0
 BACKFILL_PAIRS = 50         # the reference's per-frame cap
 BACKFILL_WARM = 100
 BACKFILL_CHUNK = 1000       # frames per drained backlog
-SHARD_STRIDE = 1 << 40      # msg_id = shard * SHARD_STRIDE + seq
 WAIT_S = 120                # upper bound on any single wait in a run
 
 
@@ -173,6 +172,7 @@ def records(seed: int, n_frames: int, pairs: int, rate: float
     """Every record the generator sent in frames ``[0, n_frames)``, with
     the frame it rode in; plus each frame's malformed kind (or None)."""
     from gen import frame_spec, symbol
+    from dexscraper_spark.sources.socket_source import SHARD_STRIDE
     cols: dict[str, list] = {c: [] for c in (
         "k", "symbol", "ts", "price", "volume", "kind", "msg_id", "pos")}
     malformed = []
@@ -385,6 +385,7 @@ def _live(run: FeedRun, gen: GenProc, lake: str, ckpt: str,
             max(run.sink_log) >= lp["batchId"]
 
     _wait(drained, "the stream to drain", q)
+    run.mem.finish(run.spark)
     progress = _progress(q)
     q.stop()
     batches = collect_batches(progress, run.sink_log)
@@ -431,6 +432,7 @@ def _backfill(run: FeedRun, gen: GenProc, lake: str, ckpt: str,
         gen.call(cmd="prefill", n=BACKFILL_CHUNK)
         drain_s.append(drain())
         frames += BACKFILL_CHUNK
+    run.mem.finish(run.spark)
     head = gen.call(cmd="head")["head"]
     progress = [p for q in queries for p in _progress(q)]
     batches = collect_batches(progress, run.sink_log)

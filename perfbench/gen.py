@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import struct
 import sys
 import threading
 import time
@@ -102,48 +101,31 @@ def frame_spec(seed: int, k: int, pairs: int, rate: float) -> FrameSpec:
                      price, volume, liquidity)
 
 
-_STR_CACHE: dict[int, bytes] = {}
-_METRICS = struct.Struct("<8d")
-
-
-def _string_block(rank: int) -> bytes:
-    """Length-prefixed string fields of a symbol's records, 8-aligned:
-    the constant part of every record the symbol appears in."""
-    blk = _STR_CACHE.get(rank)
-    if blk is None:
+def frame_pairs(spec: FrameSpec) -> list[dict]:
+    """The pair records of ``spec``, as ``sources.binary.make_frame``
+    takes them."""
+    out = []
+    for i, rank in enumerate(spec.ranks.tolist()):
         sym = symbol(rank)
-        fields = (_CHAINS[rank % 4], _PROTOCOLS[rank % 4],
-                  f"PAIR{sym}" + "x" * 30, f"Token {sym}", sym,
-                  f"MINT{sym}" + "y" * 30)
-        out = bytearray()
-        for f in fields:
-            raw = f.encode("utf-8")
-            out.append(len(raw))
-            out += raw
-        while len(out) % 8:
-            out.append(0)
-        blk = _STR_CACHE[rank] = bytes(out)
-    return blk
+        out.append({
+            "chain": _CHAINS[rank % 4], "protocol": _PROTOCOLS[rank % 4],
+            "pair_address": f"PAIR{sym}" + "x" * 30,
+            "base_token_name": f"Token {sym}", "base_token_symbol": sym,
+            "base_token_address": f"MINT{sym}" + "y" * 30,
+            "price": float(spec.price[i]), "price_usd": float(spec.price[i]),
+            "price_change_h24": 1.5,
+            "liquidity_usd": float(spec.liquidity[i]),
+            "volume_h24": float(spec.volume[i]), "fdv": 5e6,
+            "created_at": float(spec.event_ts[i])})
+    return out
 
 
 def encode_frame(spec: FrameSpec) -> bytes:
-    """The wire bytes of ``spec`` — the same layout as
-    ``sources.binary.make_frame`` (checked by the benchmark's tests),
-    built from cached per-symbol string blocks so the generator keeps its
-    schedule at any rate the engine can take."""
-    from dexscraper_spark.sources.binary import (
-        HEADER_SKIP, MAGIC, MALFORMED_FRAMES, PAIRS_MARKER, RECORD_SIZE)
+    """The wire bytes of ``spec``, from the engine's own encoder."""
+    from dexscraper_spark.sources.binary import MALFORMED_FRAMES, make_frame
     if spec.malformed is not None:
         return MALFORMED_FRAMES[spec.malformed]
-    parts = [MAGIC, PAIRS_MARKER, b"\x00" * HEADER_SKIP]
-    for i in range(len(spec.ranks)):
-        blk = _string_block(int(spec.ranks[i]))
-        p = float(spec.price[i])
-        rec = blk + _METRICS.pack(p, p, 1.5, float(spec.liquidity[i]),
-                                  float(spec.volume[i]), 5e6,
-                                  float(spec.event_ts[i]), 0.0)
-        parts.append(rec + b"\x00" * (RECORD_SIZE - len(rec)))
-    return b"".join(parts)
+    return make_frame(frame_pairs(spec))
 
 
 class Generator:

@@ -18,23 +18,31 @@ import numpy as np
 
 from common import median, percentile
 
-SF = 0.002
+# TPC-H-like tables at sf 0.01; events, documents and embeddings at sf
+# 0.05 (50,000 events, 2,500 documents and embeddings), so the as-of,
+# proximity, dedup, similarity and sketch kernels do real work in each
+# execution. sf 0.1 for these three made a run about 15 s longer (a
+# median of 86 s against 70 s over ten and four seeds), more than the
+# benchmark's time budget allows.
+SF = 0.01
+SIDE_SF = 0.05
 TAIL_P = 75.0
-MIN_SAMPLES = 40        # ten executions beyond the p75
+MIN_SAMPLES = 40        # ten executions beyond the p75; three rounds
 # A fixed cross-section of the registry, one or more per operator family
 # (OHLC, top-k, proximity and as-of joins, dedup, similarity, sketches,
-# aggregates, windows, filters, decode). Running all 50 registered queries
-# costs a 50-100 s warm-up round per run, more than the benchmark's time
-# budget allows next to the feed workload.
+# aggregates, windows, filters). Running all 50 registered queries costs a
+# 50-100 s warm-up round per run, more than the benchmark's time budget
+# allows next to the feed workload. Left out for the same budget:
+# window_moving_sum, whose time is mostly the transfer of one result row
+# per event to Python, and decode_binary_pipeline, which reads no lake
+# table (the feed workloads measure the decode kernel).
 QUERIES = (
     "flagship_topk_revenue", "ohlc_bars", "topk_customers", "rank_trending",
     "join_range_proximity", "join_nearest_click", "join_asof_click",
     "dedup_exact_docs", "text_fingerprint_dups", "similarity_topk",
-    "sketch_kmv_distinct", "agg_rollup", "window_moving_sum",
-    "sessionize_users", "filter_range_dsl", "decode_binary_pipeline",
+    "sketch_kmv_distinct", "agg_rollup", "sessionize_users",
+    "filter_range_dsl",
 )
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
 CACHED = ("customer", "orders", "lineitem", "events", "documents",
           "embeddings")   # the tables ``QUERIES`` read
 
@@ -48,30 +56,15 @@ def result_digest(rows) -> str:
     return h.hexdigest()
 
 
-def _same(a, b) -> bool:
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return a == b
-        return (math.isnan(fa) and math.isnan(fb)) or fa == fb
-    return a == b
-
-
 def matches_oracle(cols, rows, duck_cols, duck_rows) -> bool:
-    """Row count, column names and bit-exact values, order-insensitive."""
+    """Row count, column names and bit-exact values, order-insensitive,
+    by the repository's own oracle rules (``tools/check_oracle.py``)."""
+    from tools.check_oracle import normalize, values_equal
     if len(rows) != len(duck_rows) or sorted(cols) != sorted(duck_cols):
         return False
-
-    def norm(rs, cs):
-        order = sorted(range(len(cs)), key=lambda i: cs[i])
-        return sorted((tuple(r[i] for i in order) for r in rs),
-                      key=lambda r: tuple(repr(x) for x in r))
-
-    return all(_same(a, b)
-               for ra, rb in zip(norm(rows, cols), norm(duck_rows, duck_cols))
+    return all(values_equal(a, b)
+               for ra, rb in zip(normalize(rows, cols)[0],
+                                 normalize(duck_rows, duck_cols)[0])
                for a, b in zip(ra, rb))
 
 
@@ -81,15 +74,14 @@ def order(seed: int, rnd: int) -> list[str]:
 
 
 def run_lake(spark, seed: int, seconds: float, tracer, tmp: str,
-             t_proc: float) -> dict:
-    import duckdb
+             t_proc: float, mem) -> dict:
     from lakegen import write_lake
     from dexscraper_spark.plans.registry import all_queries
     from dexscraper_spark.sources.tables import load_table
 
     sf_dir = os.path.join(tmp, "lake")
     with tracer.span("lakegen", "generator"):
-        write_lake(sf_dir, seed, SF)
+        write_lake(sf_dir, seed, SF, SIDE_SF)
     with tracer.span("tables.load", "tables"):
         t = time.perf_counter()
         for name in CACHED:
@@ -146,14 +138,12 @@ def run_lake(spark, seed: int, seconds: float, tracer, tmp: str,
             if not ok:
                 failed += 1
     t1 = time.time()
+    mem.finish(spark)
     checks["repeats_match_first_result"] = not failed
 
     # oracle check, outside every timing
-    con = duckdb.connect()
-    con.execute("SET threads TO 1")
-    for name in TABLES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{name}.parquet')")
+    from tools.check_oracle import duck_con
+    con = duck_con(sf_dir)
     bad = []
     for name in QUERIES:
         if name not in first:   # failed in the warm-up, counted there

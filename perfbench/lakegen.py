@@ -4,8 +4,8 @@ Writes the ten parquet tables the query registry reads (a TPC-H-like star
 schema plus ``events``, ``documents`` and ``embeddings``) with the same
 column names, types and value shapes as the engine's test data, so every
 registered query and its DuckDB oracle run unchanged. Row counts scale
-with ``sf`` the way the test data does; the contents are a pure function
-of ``(seed, sf)``.
+with the scale factors the way the test data does; the contents are a
+pure function of the seed and the scale factors.
 """
 
 from __future__ import annotations
@@ -46,17 +46,20 @@ def _money(rng, lo, hi, n):
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
-def make_tables(seed: int, sf: float) -> dict[str, pa.Table]:
-    """All ten tables as Arrow tables (deterministic per seed and sf)."""
+def make_tables(seed: int, sf: float, side_sf: float
+                ) -> dict[str, pa.Table]:
+    """All ten tables as Arrow tables (deterministic per seed and scales).
+    ``sf`` scales the TPC-H-like tables and ``side_sf`` scales
+    ``events``, ``documents`` and ``embeddings``."""
     rng = np.random.default_rng([seed, 17])
     n_cust = max(int(150_000 * sf), 50)
     n_supp = max(int(10_000 * sf), 10)
     n_part = max(int(200_000 * sf), 50)
     n_ord = max(int(1_500_000 * sf), 100)
     n_line = 4 * n_ord
-    n_ev = max(int(1_000_000 * sf), 100)
-    n_doc = max(int(50_000 * sf), 100)
-    n_vec = max(int(50_000 * sf), 100)
+    n_ev = max(int(1_000_000 * side_sf), 100)
+    n_doc = max(int(50_000 * side_sf), 100)
+    n_vec = max(int(50_000 * side_sf), 100)
 
     t: dict[str, pa.Table] = {}
     t["region"] = pa.table({
@@ -142,9 +145,10 @@ def make_tables(seed: int, sf: float) -> dict[str, pa.Table]:
     return t
 
 
-def write_lake(out_dir: str, seed: int, sf: float) -> None:
+def write_lake(out_dir: str, seed: int, sf: float, side_sf: float
+               ) -> None:
     """Write every table as ``<out_dir>/<name>.parquet``."""
     os.makedirs(out_dir, exist_ok=True)
-    for name, table in make_tables(seed, sf).items():
+    for name, table in make_tables(seed, sf, side_sf).items():
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
 

@@ -30,8 +30,8 @@ import sys  # noqa: E402
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from common import (ROOT, MemSampler, Tracer, env_stamp, nproc,  # noqa: E402
-                    start_spark)
+from common import (ROOT, MemSampler, Tracer, cpu_probe_ms,  # noqa: E402
+                    env_stamp, nproc, start_spark)
 
 sys.path.insert(0, ROOT)
 WORKLOADS = ("feed_live", "feed_backfill", "lake_queries")
@@ -39,7 +39,7 @@ WORK = os.path.join(ROOT, "perfbench", ".work")
 LAYERS = ("session", "generator", "ingest", "stream", "state", "sink",
           "decode", "tables", "plan", "fetch")
 E2E = ("setup_s", "latency_p50_ms", "latency_tail_ms", "throughput_per_s",
-       "peak_pss_mb")
+       "memory_mb")
 
 
 def layer_names() -> list[str]:
@@ -55,8 +55,9 @@ def layer_names() -> list[str]:
         "stream.state_rows", "stream.state_bytes", "sink.write_ms",
         "sink.files_written", "sink.bytes_written", "sink.bytes_per_row",
         "plan.build_ms", "plan.fetch_ms", "exec.tasks", "exec.stages",
-        "exec.failed_tasks", "tables.load_ms", "gen.late_ms", "trace.spans",
-        "trace.cost_ms"]
+        "exec.failed_tasks", "tables.load_ms", "gen.late_ms",
+        "memory.python_mb", "memory.jvm_heap_mb", "memory.jvm_non_heap_mb",
+        "trace.spans", "trace.cost_ms"]
         + [f"q.{q}_ms" for q in QUERIES]
         + [f"self.{lay}_ms" for lay in LAYERS]
         + [f"trace.e2e.{k}" for k in E2E])
@@ -99,7 +100,13 @@ def main(argv=None) -> int:
     tmp = os.path.join(WORK, f"run-{os.getpid()}")
     os.makedirs(tmp)
     tracer = Tracer(bool(args.trace))
-    n = nproc()
+    # half the vCPUs run Spark tasks; the other half is left to what each
+    # task slot drives besides its JVM thread (a Python worker for every
+    # pandas or Arrow UDF), the driver's planning, JIT and GC threads and
+    # the load generator. On a 4-vCPU VM, lake_queries' median latency
+    # spread 0.15 (quartile distance over median, four seeds) at local[4]
+    # and 0.06 at local[2].
+    n = max(nproc() // 2, 1)
     try:
         with MemSampler() as mem:
             with tracer.span("session.start", "session"):
@@ -108,22 +115,28 @@ def main(argv=None) -> int:
             try:
                 if args.workload == "lake_queries":
                     e2e, layer, lines, res, checks = _lake(args, spark,
-                                                          tracer, tmp)
+                                                          tracer, tmp, mem)
                 else:
                     e2e, layer, lines, res, checks = _feed(args, spark,
                                                           tracer, tmp, mem)
             finally:
                 _stop_spark(spark)
         stamp["load1_end"] = os.getloadavg()[0]
+        stamp["cpu_probe_ms"] = cpu_probe_ms()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    e2e["peak_pss_mb"] = (mem.peak_mb, "MB")
+    e2e["memory_mb"] = (mem.total_mb, "MB")
     attempted, failed = int(res["attempted"]), int(res["failed"])
-    lines.append(f"peak_pss_mb = {mem.peak_mb:.1f} MB")
+    lines.append(f"memory_mb = {mem.total_mb:.1f} MB (Python peak PSS "
+                 f"{mem.python_mb:.1f}, JVM live heap {mem.heap_mb:.1f}, "
+                 f"JVM non-heap {mem.non_heap_mb:.1f})")
     lines.append(f"setup_s = {e2e['setup_s'][0]:.3f} s")
     lines.append(f"error_rate = {failed / attempted:.6f} "
                  f"({failed} failed of {attempted} attempted)")
+    layer["memory.python_mb"] = mem.python_mb
+    layer["memory.jvm_heap_mb"] = mem.heap_mb
+    layer["memory.jvm_non_heap_mb"] = mem.non_heap_mb
     if tracer.enabled:
         for lay, s in tracer.self_time_by_layer().items():
             if lay in LAYERS:
@@ -224,9 +237,10 @@ def _feed_trace(run, res, layer, tmp) -> None:
     layer["sink.bytes_per_row"] = nbytes / max(rows, 1)
 
 
-def _lake(args, spark, tracer, tmp):
+def _lake(args, spark, tracer, tmp, mem):
     import lake
-    res = lake.run_lake(spark, args.seed, args.seconds, tracer, tmp, T_PROC)
+    res = lake.run_lake(spark, args.seed, args.seconds, tracer, tmp, T_PROC,
+                        mem)
     e2e, layer, lines = lake.summarize(res, spark)
     return e2e, layer, lines, res, res["checks"]
 

@@ -124,26 +124,11 @@ def test_traffic_dimensions():
     assert np.mean(ranks == 1) > 10 * np.mean(ranks == 100)   # skewed
 
 
-def test_encoded_frames_match_the_engine_encoder_and_decode_back():
-    from dexscraper_spark.sources.binary import make_frame
+def test_encoded_frames_decode_back():
     from dexscraper_spark.sources.decode import parse_frame
     spec = next(s for s in (gen.frame_spec(5, k, 20, 50.0)
                             for k in range(300, 400)) if s.malformed is None)
-    pairs = []
-    for i, r in enumerate(spec.ranks):
-        sym = gen.symbol(int(r))
-        pairs.append({
-            "chain": gen._CHAINS[r % 4], "protocol": gen._PROTOCOLS[r % 4],
-            "pair_address": f"PAIR{sym}" + "x" * 30,
-            "base_token_name": f"Token {sym}", "base_token_symbol": sym,
-            "base_token_address": f"MINT{sym}" + "y" * 30,
-            "price": spec.price[i], "price_usd": spec.price[i],
-            "price_change_h24": 1.5, "liquidity_usd": spec.liquidity[i],
-            "volume_h24": spec.volume[i], "fdv": 5e6,
-            "created_at": spec.event_ts[i]})
-    payload = gen.encode_frame(spec)
-    assert payload == make_frame(pairs)
-    rows = parse_frame(payload)
+    rows = parse_frame(gen.encode_frame(spec))
     assert [r["base_token_symbol"] for r in rows] == \
         [gen.symbol(int(r)) for r in spec.ranks]
     assert [r["created_at"] for r in rows] == spec.event_ts.tolist()
