@@ -1,5 +1,5 @@
-.PHONY: test test-all check check-big difftest bench bench-gate recall \
-	recall-gate stress smoke
+.PHONY: test test-all check check-big difftest bench bench-gate perfbench \
+	recall recall-gate stress smoke
 
 # default lane: pyproject addopts exclude the `slow` marker (multi-second
 # delta/crash-replay/socket/e2e integration tests) so the suite fits the
@@ -26,6 +26,13 @@ difftest:
 # old /tmp-captured retry also clobbered concurrent invocations).
 bench:
 	python bench.py
+
+# The repository benchmark (BENCHMARK.json, perfbench/): its own helper
+# tests, then one short lake_queries run that prints the end-to-end and
+# per-layer metrics and checks results against the DuckDB oracles.
+perfbench:
+	python3 -m pytest perfbench -q
+	python3 perfbench/run.py --workload lake_queries --seed 1 --seconds 10 --trace 0
 
 # Run the bench, save it, and alarm on any per-query regression vs the
 # prior round's BENCH_r*.json (1.5x AND >0.15s absolute). OLD is passed

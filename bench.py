@@ -47,14 +47,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # each builder): warm runs serve the artifact, so only these get a second,
 # caches-cleared timing in the cold pass.
 MATERIALIZED_ROWS = (
-    "ohlc_bars",                # _OHLC_BARS_CACHE (plans/catalog.py)
-    "similarity_ivf_full_probe",  # _IVF_INDEX_CACHE
+    # artifacts held by the session memo (persist.session_memo)
+    "ohlc_bars",                # bar artifact, memoized as its prepared plan
+    "similarity_ivf_full_probe",  # "ivf" entry (plans/catalog.py)
     "curation_pipeline",        # curated-corpus artifact (plans/curation.py)
-    "sink_csv_lines",           # _BARS_CACHE (plans/sinks_catalog.py)
+    "sink_csv_lines",           # "bars" entry (plans/sinks_catalog.py)
     "sink_bar_rows",
-    "sink_excel",               # _XTOKENS_CACHE
-    "sink_document_rows",       # _TOKENS_CACHE
-    "sink_text_lines",          # _XTOKENS_CACHE + _BARS_CACHE
+    "sink_excel",               # "xtokens" entry
+    "sink_document_rows",       # "tokens" entry
+    "sink_text_lines",          # "xtokens" + "bars" entries
     # In-query tracked persists (not artifacts, but warm runs 2..3 serve
     # the persisted intermediate from the CacheManager): a caches-cleared
     # cold row records the honest first-build cost (VERDICT r12 §wrong-2).
@@ -202,11 +203,11 @@ def main() -> None:
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
-    # Cold pass: first-build cost of every materialized row, all module
-    # caches cleared before each timing so no row serves another's
-    # artifact. Source tables stay block-manager-cached from warmup
-    # (canonicalized-plan match survives the resolution-cache clear), so
-    # this measures artifact REBUILD, not parquet IO.
+    # Cold pass: first-build cost of every materialized row, the session
+    # memo released before each timing so no row serves another's
+    # artifact. The release also unpersists the source tables cached at
+    # warmup (REFRESH TABLE semantics), so each timing includes re-reading
+    # them from parquet, not only the artifact rebuild.
     cold: dict[str, float] = {}
     if "--no-cold" not in sys.argv:
         from dexscraper_spark.plans.registry import clear_plan_cache

@@ -299,19 +299,18 @@ def exact_cosine_pairs_blocked(emb: DataFrame, *, id_col: str = "vec_id",
     ).filter(F.col("cosine") >= threshold)
 
 
-_LSH_PLANES_CACHE: dict = {}
-
-
 def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
     """Hyperplane weights h_p[i] = (xxhash64(p*dim + i) mod 2001 - 1000)/1000
     — deterministic pseudo-random planes. Evaluated ONCE per session by the
-    JVM (one tiny job) and folded into the signature expression as literals:
-    leaving xxhash64 inside the per-row lambda re-hashes num_planes×dim
-    times per ROW (46 M hash evals over a 60 k corpus — measured as the
-    dominant LSH cost). Same formula, same doubles, identical signatures.
+    JVM (one tiny job, memoized in persist.session_memo) and folded into
+    the signature expression as literals: leaving xxhash64 inside the
+    per-row lambda re-hashes num_planes×dim times per ROW (46 M hash evals
+    over a 60 k corpus — measured as the dominant LSH cost). Same formula,
+    same doubles, identical signatures.
     """
-    key = (spark.sparkContext.applicationId, num_planes, dim)
-    if key not in _LSH_PLANES_CACHE:
+    from dexscraper_spark.persist import session_memo
+
+    def build() -> list:
         # xxhash64 of the INT index — matches the int arithmetic
         # (sequence elements) the in-row expression used
         rows = (spark.range(num_planes * dim)
@@ -320,9 +319,8 @@ def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
                           - F.lit(1000.0)) / F.lit(1000.0)).alias("w"))
                 .collect())
         ws = [r["w"] for r in rows]
-        _LSH_PLANES_CACHE[key] = [ws[p * dim:(p + 1) * dim]
-                                  for p in range(num_planes)]
-    return _LSH_PLANES_CACHE[key]
+        return [ws[p * dim:(p + 1) * dim] for p in range(num_planes)]
+    return session_memo(spark, ("lsh_planes", num_planes, dim), build)
 
 
 def lsh_signature(vec_col, *, num_planes: int = 16, dim: int = 64,

@@ -1,5 +1,13 @@
-"""Tracked persists — single release point for every internal
-``.persist()`` the engine's operators take.
+"""Session state release point: the session memo, tracked persists and
+materialized artifacts.
+
+:func:`session_memo` is the engine's one cache for derived frames a
+long-lived session reuses — resolved tables, prepared plans, the bar and
+token materialized views, the IVF index, the LSH planes. Entries are
+keyed by ``(applicationId, *key)``; an access from a new SparkContext
+releases and drops every entry of the previous ones, and
+:func:`release_memo` (called first by ``registry.clear_plan_cache()``,
+the REFRESH entry point) releases the rest.
 
 Operators persist intermediates they read more than once (simhash
 fingerprints, MinHash candidate pairs, the fine OHLC bar frame, IVF
@@ -7,12 +15,11 @@ assignments, the curation dedup frame). Those handles used to be
 function-locals: nothing outside the operator could unpersist them, so
 every artifact refresh/rebuild cycle leaked block-manager storage.
 Routing them through :func:`tracked_persist` gives
-``registry.clear_plan_cache()`` (the REFRESH entry point) one switch
-that releases them all.
+``registry.clear_plan_cache()`` one switch that releases them all.
 
-Kept as a flat list, not app-keyed: entries belonging to stopped
-sessions unpersist as harmless no-ops, and a long-lived engine calls
-release on every refresh anyway.
+Tracked persists are a flat list, not app-keyed: entries belonging to
+stopped sessions unpersist as harmless no-ops, and a long-lived engine
+calls release on every refresh anyway.
 """
 
 from __future__ import annotations
@@ -20,11 +27,46 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
+T = TypeVar("T")
+
+_MEMO: dict[tuple, object] = {}
 _TRACKED: list[DataFrame] = []
 _ARTIFACT_DIRS: list[str] = []
+
+
+def _release(entry) -> None:
+    try:
+        entry.unpersist()
+    except Exception:
+        pass  # no unpersist (plain values), or owning session stopped
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()`` once per ``(applicationId, *key)``; later calls in the
+    same application return the identical object. Entries of other
+    (stopped) applications are released and dropped first, so a process
+    that creates several sessions does not pin dead frames. ``key``'s
+    first element names the entry kind (``"plan"``, ``"table"``, ...)."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        _release(_MEMO.pop(k))
+    full = (app, *key)
+    if full not in _MEMO:
+        _MEMO[full] = build()
+    return _MEMO[full]
+
+
+def release_memo() -> None:
+    """Release every memo entry (``unpersist()`` where it has one) and
+    drop it; the next access rebuilds against current files."""
+    for entry in _MEMO.values():
+        _release(entry)
+    _MEMO.clear()
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -84,26 +126,22 @@ def release_artifact(df: DataFrame) -> bool:
 def release_tracked() -> None:
     """Unpersist every tracked frame (refresh-cycle storage hygiene).
 
-    Deliberately does NOT delete materialized artifact directories:
-    module caches (_OHLC_BARS_CACHE, _BARS_CACHE, _TOKENS_CACHE,
-    _IVF_INDEX_CACHE, the plan cache) hold live scans of those dirs, and
-    standalone callers of this function (clear_curation_cache, tests) do
-    not clear them — deleting here would leave permanently-dangling
-    cached frames. Only :func:`release_artifacts`, called by
-    registry.clear_plan_cache() AFTER every module cache is cleared, may
-    sweep the dirs."""
+    Deliberately does NOT delete materialized artifact directories: the
+    session memo (plans, bar/token frames, the IVF index) holds live
+    scans of those dirs, and standalone callers of this function (tools,
+    tests) do not release it — deleting here would leave
+    permanently-dangling memoized frames. Only :func:`release_artifacts`,
+    called by registry.clear_plan_cache() AFTER :func:`release_memo`,
+    may sweep the dirs."""
     for df in _TRACKED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
+        _release(df)
     _TRACKED.clear()
 
 
 def release_artifacts() -> None:
     """Delete every materialized artifact directory. Call only after the
-    module caches holding their scans are cleared (clear_plan_cache does
-    this in order), or at process exit."""
+    memo holding their scans is released (clear_plan_cache does this in
+    order), or at process exit."""
     for p in _ARTIFACT_DIRS:
         shutil.rmtree(p, ignore_errors=True)
     _ARTIFACT_DIRS.clear()

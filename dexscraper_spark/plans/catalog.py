@@ -137,20 +137,6 @@ def _ohlc_frame_sql(frame: str, seconds: int) -> str:
     """
 
 
-_OHLC_BARS_CACHE: dict = {}
-
-
-def clear_ohlc_bars_cache() -> None:
-    """Release the block-manager storage pinned by the cached bar frames
-    (same contract as the sink layer's clear_*_cache helpers)."""
-    for df in _OHLC_BARS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _OHLC_BARS_CACHE.clear()
-
-
 @register(
     "ohlc_bars",
     " UNION ALL ".join(_ohlc_frame_sql(n, s) for n, s in
@@ -165,34 +151,30 @@ def ohlc_bars(spark, sf_dir):
     the finest level in one exploded groupBy (see ohlc_windowed_frames /
     ohlc_frames_from_partials for the bit-exactness argument). The DuckDB oracle computes each frame
     directly from the raw events, so the driver check proves
-    cascade ≡ direct. The result is memoized per (appId, sf_dir) AND kept
-    in the block-manager cache (same materialized-view pattern as the sink
-    layer's _BARS_CACHE): the bar frame is bounded by bar count — symbols ×
-    buckets, orders of magnitude below tick count at any scale — and it
-    feeds repeated reads, so repeated runs are a cached scan instead of
-    re-running the rollup cascade."""
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_other_apps(_OHLC_BARS_CACHE, key[0])
-    if key not in _OHLC_BARS_CACHE:
-        from dexscraper_spark.config import Timeframe
-        from dexscraper_spark.operators.ohlc import ohlc_windowed_frames
-        ev = _t(spark, sf_dir, "events")
-        bars = ohlc_windowed_frames(
-            ev, symbol_col="event_type", ts_col="ts", price_col="value",
-            qty_col="value", order_col="event_id",
-            frames=tuple((tf.value, tf.seconds)
-                         for tf in (Timeframe.M5, Timeframe.H1,
-                                    Timeframe.H6, Timeframe.H24)),
-        )
-        # lineage-truncated artifact: warm reads of a plain cached frame
-        # re-analyze the whole cascade lineage per call (sinks_catalog
-        # _bars has the same rationale + deterministic release)
-        from dexscraper_spark.persist import materialize_artifact
-        _OHLC_BARS_CACHE[key] = materialize_artifact(
-            bars.withColumn("bucket_ts", F.col("bucket_ts").cast("long")),
-            "ohlcbars")
-    return _OHLC_BARS_CACHE[key]
+    cascade ≡ direct. The result is a materialized artifact (the same
+    materialized-view pattern as the sink layer's ``_bars``), memoized per
+    (appId, sf_dir) through the registry's prepared-plan memo: the bar
+    frame is bounded by bar count — symbols × buckets, orders of magnitude
+    below tick count at any scale — and it feeds repeated reads, so
+    repeated runs are an artifact scan instead of re-running the rollup
+    cascade. A direct call builds a fresh artifact."""
+    from dexscraper_spark.config import Timeframe
+    from dexscraper_spark.operators.ohlc import ohlc_windowed_frames
+    from dexscraper_spark.persist import materialize_artifact
+    ev = _t(spark, sf_dir, "events")
+    bars = ohlc_windowed_frames(
+        ev, symbol_col="event_type", ts_col="ts", price_col="value",
+        qty_col="value", order_col="event_id",
+        frames=tuple((tf.value, tf.seconds)
+                     for tf in (Timeframe.M5, Timeframe.H1,
+                                Timeframe.H6, Timeframe.H24)),
+    )
+    # lineage-truncated artifact: warm reads of a plain cached frame
+    # re-analyze the whole cascade lineage per call (sinks_catalog
+    # _bars has the same rationale + deterministic release)
+    return materialize_artifact(
+        bars.withColumn("bucket_ts", F.col("bucket_ts").cast("long")),
+        "ohlcbars")
 
 
 # ---------------------------------------------------------------------------
@@ -1923,19 +1905,6 @@ def streaming_ohlc_pipeline(spark, sf_dir):
 # (ivf_save/ivf_load) and probes prune partitions. Model-fit → rows-only.
 # ---------------------------------------------------------------------------
 
-_IVF_INDEX_CACHE: dict = {}
-
-
-def clear_ivf_index_cache() -> None:
-    """Release the persisted cluster assignments the cached IVF indexes
-    hold (same contract as clear_ohlc_bars_cache)."""
-    for idx in _IVF_INDEX_CACHE.values():
-        try:
-            idx.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _IVF_INDEX_CACHE.clear()
-
 
 def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
     # r12 optimization: ivf_build_deterministic, not the MLlib ivf_build.
@@ -1949,14 +1918,11 @@ def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
     # so its oracle-checked output is invariant to which centroids the
     # quantizer fits — only the build cost changes (measured ~3x).
     from dexscraper_spark.operators.similarity import ivf_build_deterministic
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir, nlist, seed)
-    evict_other_apps(_IVF_INDEX_CACHE, key[0])
-    if key not in _IVF_INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _IVF_INDEX_CACHE[key] = ivf_build_deterministic(
-            emb, nlist=nlist, seed=seed, cache=True)
-    return _IVF_INDEX_CACHE[key]
+    from dexscraper_spark.persist import session_memo
+    return session_memo(
+        spark, ("ivf", sf_dir, nlist, seed),
+        lambda: ivf_build_deterministic(_t(spark, sf_dir, "embeddings"),
+                                        nlist=nlist, seed=seed, cache=True))
 
 
 # NOT registered: the nprobe<nlist probe is approximate by design, so its

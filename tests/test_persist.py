@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dexscraper_spark import persist as P
+from tests.conftest import SF_DIR
 
 
 def _stored(df) -> bool:
@@ -46,12 +47,12 @@ def test_operator_internal_persists_release_on_clear(spark):
     assert all(not _stored(df) for df in handles)
 
 
-def test_curation_cache_clear_delegates_to_shared_tracker(spark):
-    """clear_curation_cache() must release persists taken INSIDE the
-    operators the pipeline calls (simhash fingerprints), not only its
-    own dedup frame — the r6 ADVICE leak."""
-    from dexscraper_spark.plans.curation import (
-        clear_curation_cache, curate_corpus)
+def test_release_tracked_covers_curation_operator_persists(spark):
+    """release_tracked() must release persists taken INSIDE the
+    operators the curation pipeline calls (simhash fingerprints), not
+    only its own dedup frame, or refresh cycles leak block-manager
+    storage."""
+    from dexscraper_spark.plans.curation import curate_corpus
 
     P.release_tracked()
     docs = spark.createDataFrame(
@@ -62,7 +63,7 @@ def test_curation_cache_clear_delegates_to_shared_tracker(spark):
     handles = list(P._TRACKED)
     assert len(handles) >= 2          # dedup frame + fingerprint table
     assert all(_stored(df) for df in handles)
-    clear_curation_cache()
+    P.release_tracked()
     assert P._TRACKED == []
     assert all(not _stored(df) for df in handles)
 
@@ -72,8 +73,8 @@ def test_materialized_artifacts_release_deterministically(spark):
     deterministic half the localCheckpoint approach could not give);
     a stale frame read after release fails LOUDLY, matching the plan
     cache's staleness contract. release_tracked must NOT delete them:
-    module caches hold live scans, and standalone release_tracked
-    callers (clear_curation_cache) don't clear those caches."""
+    the session memo holds live scans, and standalone release_tracked
+    callers don't release the memo."""
     import os
 
     import pytest
@@ -113,21 +114,20 @@ def test_release_artifact_frees_one_frame(spark):
     P.release_artifacts()
 
 
-def test_clear_curation_cache_leaves_other_artifacts_usable(spark):
-    """Regression (r7 review): clear_curation_cache delegates to
-    release_tracked, which used to sweep ALL artifact dirs — leaving the
-    ohlc-bars module cache serving a scan of a deleted dir (FILE_NOT_EXIST
-    on every later call, with no rebuild path short of clear_plan_cache).
-    The artifact another cache holds must stay readable."""
-    from dexscraper_spark.plans.catalog import ohlc_bars
-    from dexscraper_spark.plans.curation import clear_curation_cache
-    from dexscraper_spark.plans.registry import clear_plan_cache
+def test_release_tracked_leaves_memoized_artifacts_usable(spark):
+    """Regression: release_tracked used to sweep ALL
+    artifact dirs — leaving the memoized ohlc_bars artifact a scan of a
+    deleted dir (FILE_NOT_EXIST on every later call, with no rebuild
+    path short of clear_plan_cache). The artifact the memo holds must
+    stay readable."""
+    from dexscraper_spark.plans.registry import clear_plan_cache, queries
 
+    ohlc_bars = queries()["ohlc_bars"]
     clear_plan_cache()
-    n = ohlc_bars(spark, "/root/testdata/sf0.001").count()
+    n = ohlc_bars(spark, SF_DIR).count()
     assert n > 0
-    clear_curation_cache()
-    assert ohlc_bars(spark, "/root/testdata/sf0.001").count() == n
+    P.release_tracked()
+    assert ohlc_bars(spark, SF_DIR).count() == n
     clear_plan_cache()
 
 
@@ -140,9 +140,83 @@ def test_ivf_unpersist_releases_artifact_dir(spark):
     from dexscraper_spark.operators.similarity import ivf_build
 
     P.release_artifacts()
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     idx = ivf_build(emb, nlist=4, cache=True)
     [path] = P._ARTIFACT_DIRS
     assert os.path.isdir(path)
     idx.unpersist()
     assert not os.path.exists(path) and P._ARTIFACT_DIRS == []
+
+
+class _Probe:
+    """A memo entry that records its release."""
+
+    def __init__(self):
+        self.released = False
+
+    def unpersist(self):
+        self.released = True
+
+
+def test_session_memo_releases_other_apps_entries(spark):
+    """An entry keyed to another (stopped) application is released and
+    dropped on the next access; same-app access returns the identical
+    object without rebuilding; entries without ``unpersist`` (plain
+    lists) are dropped too."""
+    stale, stale_list = _Probe(), [1, 2]
+    P._MEMO[("app-gone", "probe", 1)] = stale
+    P._MEMO[("app-gone", "probe", 2)] = stale_list
+    built = []
+
+    def build():
+        built.append(1)
+        return _Probe()
+
+    try:
+        first = P.session_memo(spark, ("probe", "x"), build)
+        assert stale.released
+        assert not any(k[0] == "app-gone" for k in P._MEMO)
+        assert P.session_memo(spark, ("probe", "x"), build) is first
+        assert built == [1] and not first.released
+    finally:
+        P._MEMO.pop((spark.sparkContext.applicationId, "probe", "x"), None)
+
+
+def test_clear_plan_cache_releases_every_memo_kind(spark, monkeypatch):
+    """REFRESH releases every memo entry kind — prepared plans, tables
+    (unpersisted, like Spark's REFRESH TABLE), the bar/token artifacts,
+    the IVF index and the LSH planes list — and empties the memo."""
+    import os
+
+    from dexscraper_spark.operators.similarity import IvfIndex, _lsh_planes
+    from dexscraper_spark.plans import catalog, sinks_catalog
+    from dexscraper_spark.plans.registry import clear_plan_cache, queries
+    from dexscraper_spark.sources.tables import load_table
+
+    clear_plan_cache()
+    table = load_table(spark, SF_DIR, "events").cache()
+    table.count()
+    queries()["agg_rollup"](spark, SF_DIR)
+    sinks_catalog._bars(spark, SF_DIR)
+    sinks_catalog._excel_tokens(spark, SF_DIR)
+    sinks_catalog._tokens(spark, SF_DIR)
+    index = catalog._ivf_index(spark, SF_DIR)
+    planes = _lsh_planes(spark)
+    kinds = {k[1] for k in P._MEMO}
+    assert {"plan", "table", "bars", "xtokens", "tokens", "ivf",
+            "lsh_planes"} <= kinds
+    assert isinstance(index, IvfIndex) and isinstance(planes, list)
+    ivf_dirs = [h._dexart_path for h in index._release_handles]
+
+    released = []
+    release = P._release
+    monkeypatch.setattr(P, "_release",
+                        lambda e: (released.append(e), release(e)))
+    clear_plan_cache()
+    assert P._MEMO == {}
+    assert any(e is index for e in released)
+    assert any(e is planes for e in released)
+    assert any(e is table for e in released)
+    assert not _stored(table)
+    assert ivf_dirs and not any(os.path.exists(d) for d in ivf_dirs)
+    assert P._ARTIFACT_DIRS == []

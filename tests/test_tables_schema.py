@@ -169,34 +169,37 @@ def test_scan_partition_estimate(spark, tmp_path):
     ~parallelism partitions (bytesPerCore targeting - NOT narrow, the
     case the raw file-count proxy got right by accident); ONE huge file
     splits to >= parallelism (the case the proxy got wrong: it would
-    have paid a pointless widening shuffle); remote URIs -> None."""
-    from dexscraper_spark.sources.tables import _estimate_scan_partitions
+    have paid a pointless widening shuffle); remote URIs have no local
+    sizes, so they are never widened."""
+    from dexscraper_spark.sources.tables import (_estimate_scan_partitions,
+                                                 _local_sizes)
     par = spark.sparkContext.defaultParallelism
+
+    def estimate(files):
+        sizes = _local_sizes(files)
+        assert sizes is not None
+        return _estimate_scan_partitions(spark, sizes, par)
 
     few = []
     for i in range(2):
         p = tmp_path / f"small{i}.bin"
         p.write_bytes(b"x" * 1024)
         few.append(f"file://{p}")
-    est_few = _estimate_scan_partitions(spark, few, par)
-    assert est_few is not None and est_few < par
+    assert estimate(few) < par
 
     many = []
     for i in range(par * 4):
         p = tmp_path / f"tiny{i}.bin"
         p.write_bytes(b"x" * 64)
         many.append(f"file://{p}")
-    est_many = _estimate_scan_partitions(spark, many, par)
-    assert est_many is not None and est_many >= par
+    assert estimate(many) >= par
 
     big = tmp_path / "big.bin"
     with open(big, "wb") as fh:
         fh.truncate(2 << 30)  # 2 GiB sparse
-    est_big = _estimate_scan_partitions(spark, [f"file://{big}"], par)
-    assert est_big is not None and est_big >= par
+    assert estimate([f"file://{big}"]) >= par
 
-    assert _estimate_scan_partitions(
-        spark, ["hdfs://nn/x.parquet"], par) is None
+    assert _local_sizes(["hdfs://nn/x.parquet"]) is None
 
 
 def test_fact_table_scan_widened_above_byte_floor(spark, tmp_path):
@@ -211,9 +214,13 @@ def test_fact_table_scan_widened_above_byte_floor(spark, tmp_path):
     import glob
     import os
 
+    import pytest
+
     from dexscraper_spark.sources.tables import (_WIDEN_SPLIT_BYTES,
                                                  _widen_narrow_scan)
     par = spark.sparkContext.defaultParallelism
+    if par == 1:
+        pytest.skip("a single-slot session has nothing to widen to")
 
     big = spark.range(60_000).selectExpr(
         "id", "cast(id as string) || 'x' as pad",
